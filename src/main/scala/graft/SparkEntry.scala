@@ -127,6 +127,12 @@ object SparkEntry {
         graft.pipeline.HtmlText.htmlLinksCol(col("html")).as("links"))
       .persist()
 
+  /** `df` collected into a local relation — the result form for a query
+    * that releases its own checkpoints before returning (a lazy result
+    * would re-read the released blocks when the caller runs it). */
+  private def localRows(s: SparkSession, df: DataFrame): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Dirs queued for recursive deletion at JVM exit, drained by ONE static
     * shutdown hook — a hook per call would accumulate Thread objects (and
     * retained paths) unboundedly in a long-lived JVM. */
@@ -1481,7 +1487,7 @@ object SparkEntry {
     }),
 
     // INT8 COMPACTION lifecycle: three installments folded to one dir by
-    // the atomic-swap int8Compact, then searched — code bytes are
+    // the int8Compact swap, then searched — code bytes are
     // untouched, so the result must be BIT-IDENTICAL to emb_topk_int8's
     // two-installment scan (same oracle SQL, integer-exact scores).
     "emb_int8_compact" -> ((s, dir) => {
@@ -4118,42 +4124,44 @@ object SparkEntry {
       // scan + latest-batch join in its own plan)
       val ledger = graft.pipeline.Crawl.mediaPairsLedger(s, fDir)
         .localCheckpoint()
-      val list = graft.pipeline.Crawl.mediaFetchList(s, fDir,
-        blockedDomains = blocked, pairsLedger = ledger)
-      val sched = graft.pipeline.Crawl.schedule(
-        list.select(col("url"), col("n_refs")), maxRounds = 1 << 20)
-      def midOf(u: String): Long =
-        u.substring(u.indexOf("/au/") + 4, u.length - 4).toLong
-      val bodies = sched.select(col("url")).as[String].map { u =>
-        val mid = midOf(u)
-        val n = (48 + mid % 40).toInt
-        val samples = Array.tabulate[Short](n) { i =>
-          ((((mid * 37 + i * 11) % 256) - 128) << 8).toShort
-        }
-        ("response", u, 200, Multimodal.encodeWav(16000, samples))
-      }.toDF("warc_type", "target_uri", "http_status", "body")
-      val joined = graft.pipeline.Crawl.mediaBytesJoin(ledger, bodies)
-      val keyed = joined.select(col("media_url"), col("body"))
-        .dropDuplicates("media_url")
-        .as[(String, Array[Byte])]
-        .map { case (u, b) => (u, midOf(u), b) }
-        .toDF("media_url", "mid", "body")
-      val stats = Multimodal.audioStats(
-        keyed.select(col("mid"), col("body"))
-          .as[(Long, Array[Byte])].map { case (mid, b) =>
-            Multimodal.MediaRow(mid, b,
-              Multimodal.MediaMeta("audio", 0, 0, 0, 16000))
-          }).toDF()
-      val byUrl = keyed.select(col("media_url"), col("mid"))
-        .join(stats, col("mid") === col("id")).drop("id", "mid")
-      joined.select(col("url"), col("media_url"), col("caption"))
-        .join(byUrl, Seq("media_url"))
-        .join(sched.select(col("url").as("media_url"), col("n_refs"),
-          col("round")), Seq("media_url"))
-        .select(col("url"), col("media_url"), col("caption"),
-          col("n_refs"), col("round"), col("n_samples"),
-          col("sum_sq_dev"), col("peak_dev"), col("zero_crossings"))
-        .orderBy("url", "media_url")
+      try {
+        val list = graft.pipeline.Crawl.mediaFetchList(s, fDir,
+          blockedDomains = blocked, pairsLedger = ledger)
+        val sched = graft.pipeline.Crawl.schedule(
+          list.select(col("url"), col("n_refs")), maxRounds = 1 << 20)
+        def midOf(u: String): Long =
+          u.substring(u.indexOf("/au/") + 4, u.length - 4).toLong
+        val bodies = sched.select(col("url")).as[String].map { u =>
+          val mid = midOf(u)
+          val n = (48 + mid % 40).toInt
+          val samples = Array.tabulate[Short](n) { i =>
+            ((((mid * 37 + i * 11) % 256) - 128) << 8).toShort
+          }
+          ("response", u, 200, Multimodal.encodeWav(16000, samples))
+        }.toDF("warc_type", "target_uri", "http_status", "body")
+        val joined = graft.pipeline.Crawl.mediaBytesJoin(ledger, bodies)
+        val keyed = joined.select(col("media_url"), col("body"))
+          .dropDuplicates("media_url")
+          .as[(String, Array[Byte])]
+          .map { case (u, b) => (u, midOf(u), b) }
+          .toDF("media_url", "mid", "body")
+        val stats = Multimodal.audioStats(
+          keyed.select(col("mid"), col("body"))
+            .as[(Long, Array[Byte])].map { case (mid, b) =>
+              Multimodal.MediaRow(mid, b,
+                Multimodal.MediaMeta("audio", 0, 0, 0, 16000))
+            }).toDF()
+        val byUrl = keyed.select(col("media_url"), col("mid"))
+          .join(stats, col("mid") === col("id")).drop("id", "mid")
+        localRows(s, joined.select(col("url"), col("media_url"), col("caption"))
+          .join(byUrl, Seq("media_url"))
+          .join(sched.select(col("url").as("media_url"), col("n_refs"),
+            col("round")), Seq("media_url"))
+          .select(col("url"), col("media_url"), col("caption"),
+            col("n_refs"), col("round"), col("n_samples"),
+            col("sum_sq_dev"), col("peak_dev"), col("zero_crossings"))
+          .orderBy("url", "media_url"))
+      } finally Dedup.release(ledger)
     }),
 
     // Perceptual AUDIO pair dedup (r17 — the mirror-collapse for the
@@ -4945,35 +4953,37 @@ object SparkEntry {
       // the bytes join (the crawl_media_fetch rationale)
       val ledger = graft.pipeline.Crawl.imagePairsLedger(s, fDir)
         .localCheckpoint()
-      val fetchList = graft.pipeline.Crawl.imageFetchList(s, fDir,
-        blockedDomains = Seq("blocked.example").toDF("domain"),
-        pairsLedger = ledger)
-      val sched = graft.pipeline.Crawl.schedule(fetchList, maxRounds = 5)
-      // the fetcher's 200s: a REAL 24-bit BMP per scheduled url, dims
-      // derived from the url's own (host, file) arithmetic
-      val fetched = sched.select(col("url")).as[String].map { u =>
-        val k = u.charAt("https://h".length) - '0'
-        val j = u.charAt(u.length - 5) - '0'
-        val w = 4 + j
-        val h = 3 + k
-        val rgb = Array.tabulate(w * h * 3)(i =>
-          ((k * 31 + j * 7 + i) % 251).toByte)
-        ("response", u, 200, graft.multimodal.Multimodal.encodeBmp(w, h, rgb))
-      }.toDF("warc_type", "target_uri", "http_status", "body")
-      val joined = graft.pipeline.Crawl.imageBytesJoin(ledger, fetched)
-      val decoded = joined.select(col("url"), col("img_url"), col("alt"),
-          col("body"))
-        .as[(String, String, String, Array[Byte])]
-        .map { case (u, iu, alt, b) =>
-          val d = graft.multimodal.Multimodal.decodeBmp(b)
-          (u, iu, alt, d.map(_._1).getOrElse(-1).toLong,
-            d.map(_._2).getOrElse(-1).toLong)
-        }.toDF("url", "img_url", "alt", "width", "height")
-      decoded.join(sched.select(col("url").as("img_url"), col("n_refs"),
-          col("round")), Seq("img_url"))
-        .select(col("url"), col("img_url"), col("alt"), col("n_refs"),
-          col("round"), col("width"), col("height"))
-        .orderBy("url")
+      try {
+        val fetchList = graft.pipeline.Crawl.imageFetchList(s, fDir,
+          blockedDomains = Seq("blocked.example").toDF("domain"),
+          pairsLedger = ledger)
+        val sched = graft.pipeline.Crawl.schedule(fetchList, maxRounds = 5)
+        // the fetcher's 200s: a REAL 24-bit BMP per scheduled url, dims
+        // derived from the url's own (host, file) arithmetic
+        val fetched = sched.select(col("url")).as[String].map { u =>
+          val k = u.charAt("https://h".length) - '0'
+          val j = u.charAt(u.length - 5) - '0'
+          val w = 4 + j
+          val h = 3 + k
+          val rgb = Array.tabulate(w * h * 3)(i =>
+            ((k * 31 + j * 7 + i) % 251).toByte)
+          ("response", u, 200, graft.multimodal.Multimodal.encodeBmp(w, h, rgb))
+        }.toDF("warc_type", "target_uri", "http_status", "body")
+        val joined = graft.pipeline.Crawl.imageBytesJoin(ledger, fetched)
+        val decoded = joined.select(col("url"), col("img_url"), col("alt"),
+            col("body"))
+          .as[(String, String, String, Array[Byte])]
+          .map { case (u, iu, alt, b) =>
+            val d = graft.multimodal.Multimodal.decodeBmp(b)
+            (u, iu, alt, d.map(_._1).getOrElse(-1).toLong,
+              d.map(_._2).getOrElse(-1).toLong)
+          }.toDF("url", "img_url", "alt", "width", "height")
+        localRows(s, decoded.join(sched.select(col("url").as("img_url"),
+            col("n_refs"), col("round")), Seq("img_url"))
+          .select(col("url"), col("img_url"), col("alt"), col("n_refs"),
+            col("round"), col("width"), col("height"))
+          .orderBy("url"))
+      } finally Dedup.release(ledger)
     }),
 
     // CLIP-style pair filtering (r17 — LAION step 3, closing the

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /**
  * Scalar vector-math kernels (pure Scala, no Spark deps) plus their Spark
- * Column/UDF surface.
+ * SQL UDF surface.
  *
  * Capability map (see SURVEY.md §2.5, reference kreeben/resin):
  *  - cosine          ≙ VectorOperations.CosAngle (VectorOperations.cs:305-314)
@@ -156,23 +155,6 @@ object VectorOps {
     new String(values.map(v => v.toChar))
 
   // ---------------------------------------------------------------- Spark API
-
-  // NOTE: the former HOF cosine/dot Column helpers were removed — all
-  // scoring goes through the codegen'd Catalyst expression
-  // (graft.functions.expressions.CosineSimilarity.cosineNative), which
-  // fuses the three reductions into one loop. norm/normalize below have no
-  // internal callers; they stay as the library's public array-normalization
-  // surface (unit-sphere preprocessing for cosine⇔euclidean LSH).
-
-  /** L2 norm of an array column. */
-  def normCol(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
-
-  /** L2-normalize an array<float/double> column to unit length. */
-  def normalizeCol(a: Column): Column = {
-    val n = normCol(a)
-    when(n === 0.0, a).otherwise(transform(a, x => x / n))
-  }
 
   /** Register the scalar kernels as SQL-callable UDFs. */
   def registerUdfs(spark: SparkSession): Unit = {

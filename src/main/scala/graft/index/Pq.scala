@@ -620,26 +620,17 @@ object Pq {
 
   /** Fold every `installment=` partition into ONE, dropping tombstoned
     * rows physically and clearing the deletes list (the int8Compact
-    * sibling — atomic side-dir swap; code bytes untouched, so search
-    * results are identical; asOf snapshots are only meaningful between
-    * compactions). Returns the surviving row count. */
+    * sibling — [[graft.store.Installments.fold]]; code bytes untouched,
+    * so search results are identical; asOf snapshots are only meaningful
+    * between compactions). Returns the surviving row count. */
   def pqCompact(spark: SparkSession, path: String,
                 corpusId: String = "vec_id"): Long = {
-    import org.apache.hadoop.fs.Path
     val cPath = s"$path/codes"
-    val out = new Path(cPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(cPath + "._compacting")
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(cPath).drop("installment"), corpusId)
-      .write.mode("overwrite")
-      .parquet(new Path(tmp, "installment=0").toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"compaction swap failed for $cPath")
-    spark.catalog.refreshByPath(cPath)
+    graft.store.Installments.fold(spark, cPath,
+      graft.store.Tombstones.filter(spark, path,
+        spark.read.parquet(cPath).drop("installment"), corpusId))
     graft.store.Tombstones.clear(spark, path)
-    rows
+    spark.read.parquet(cPath).count()
   }
 
   // --------------------------------------------------------------- IVF-PQ
@@ -950,16 +941,16 @@ object Pq {
     graft.store.Tombstones.appendAt(spark, path, ids, idCol, installment)
 
   /** Fold the ingest history hash-clustered by list via the shared
-    * atomic-swap [[Quantize.compactListDir]] (tombstones drop
+    * [[Quantize.compactListDir]] swap (tombstones drop
     * physically; the raw/ sidecar folds in lockstep or refined
     * searches would resurrect deleted rows / lose appended ones).
     * Returns the surviving code row count. */
   def ivfPqCompact(spark: SparkSession, path: String,
                    corpusId: String = "vec_id"): Long = {
-    val rows = Quantize.compactListDir(spark, path, s"$path/codes", corpusId)
+    Quantize.compactListDir(spark, path, s"$path/codes", corpusId)
     if (Quantize.dirExists(spark, s"$path/raw"))
       Quantize.compactListDir(spark, path, s"$path/raw", corpusId)
     graft.store.Tombstones.clear(spark, path)
-    rows
+    spark.read.parquet(s"$path/codes").count()
   }
 }

@@ -372,36 +372,20 @@ object SimilarityIndex {
    * `list_id=` partition, so a daily cadence accumulates hundreds of
    * small files per list and probe reads degrade to file-open overhead.
    * Rewrites the assignments hash-clustered by list (one file per list
-   * per writing task), materialized fully in a side dir before an atomic
-   * delete+rename swap — a concurrent search sees the old or the new
-   * layout, never a mix; row content is untouched, so results are
+   * per writing task) through [[Quantize.compactListDir]], dropping
+   * tombstoned rows; surviving row content is untouched, so results are
    * bit-identical. Centroids are not touched. Returns the compacted
    * assignment row count.
    */
   def ivfCompact(spark: SparkSession, path: String,
                  corpusId: String = "vec_id"): Long = {
-    import org.apache.hadoop.fs.Path
     val aPath = s"$path/assignments"
-    val out = new Path(aPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(aPath + "._compacting")
-    // tombstoned rows are dropped during the fold — compaction is where
-    // logical deletes become physical (the ivfSq8Compact contract)
-    graft.store.Tombstones.filter(spark, path,
-        spark.read.parquet(aPath), corpusId)
-      .withColumn("ingest", lit(0)) // the ingest history folds away
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id", "ingest")
-      .parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"assignments swap failed for $aPath")
-    spark.catalog.refreshByPath(aPath)
+    Quantize.compactListDir(spark, path, aPath, corpusId)
     // clear deletes LAST (the Bm25 vacuum ordering): until this point a
     // crashed compaction still reads correctly through the anti-join, and
     // re-running the compaction completes it
     graft.store.Tombstones.clear(spark, path)
-    rows
+    spark.read.parquet(aPath).count()
   }
 
   /**

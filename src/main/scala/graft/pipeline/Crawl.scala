@@ -211,12 +211,19 @@ object Crawl {
     // redirects) ride the checkpoint's own materialization as OBSERVED
     // metrics (r18): the former one-aggregate job over the checkpointed
     // frame was a full extra action — planning + scheduling round-trip —
-    // for conditional sums the checkpoint pass computes for free.
-    val classObs = org.apache.spark.sql.Observation()
+    // for conditional sums the checkpoint pass computes for free
+    // (redirectLinks is filter+select, so its count is the same
+    // conditional sum).
+    var redirectCount = 0L
+    var nonTextCount = 0L
+    var revisitCount = 0L
     val isResponse0 = col("warc_type") === "response"
     val resp0 =
       if (!wantLinks) respBase.filter(col("http_status") === 200 && textish)
       else {
+        // scoped to this branch: only here does an action run the
+        // observed plan, so a read anywhere else would block forever
+        val classObs = org.apache.spark.sql.Observation()
         val redirectCond =
           if (hasLocation) redirect3xx && col("http_location").isNotNull
           else lit(false)
@@ -232,7 +239,7 @@ object Crawl {
           if (wantRobots)
             Robots.pathOf(col("target_uri")) === "/robots.txt"
           else lit(false)
-        respBase
+        val cp = respBase
           .filter(col("http_status") === 200 || redirectCond ||
             ledgerDeadCond || revisitCond || robotsCond)
           .select(cols: _*)
@@ -244,6 +251,10 @@ object Crawl {
               (if (hasLocation) col("http_location").isNotNull
                else lit(false)), 1L).otherwise(0L)).as("redirects"))
           .localCheckpoint()
+        nonTextCount = obsLong(classObs, "non_text")
+        revisitCount = obsLong(classObs, "revisits")
+        if (wantRedirects) redirectCount = obsLong(classObs, "redirects")
+        cp
       }
     // the WHOLE projection, not just robots-path rows: outcome
     // derivation follows 3xx chains through arbitrary-path hops and
@@ -317,9 +328,6 @@ object Crawl {
       // inside the try: a failing frontier write must still release the
       // checkpoint blocks (a streaming retry loop would otherwise
       // accumulate leaked storage on every failed attempt)
-      var redirectCount = 0L
-      var nonTextCount = 0L
-      var revisitCount = 0L
       if (wantLinks) {
         // fetched-but-not-extracted classes still feed the ledger with
         // empty links: permanent-4xx dead pages AND non-text 200s (a
@@ -348,14 +356,6 @@ object Crawl {
           .select(col("target_uri").as("url"),
             array().cast("array<string>").as("links"), noBase, noCanon,
             noMd5, lit(true).as("revisit"))
-        // the three ledger-class tallies were observed on resp0's own
-        // checkpoint pass (r17 folded three count() actions into one
-        // aggregate job; r18 folds that job into the checkpoint itself —
-        // zero extra actions; redirectLinks is filter+select, so its
-        // count is the same conditional sum)
-        nonTextCount = obsLong(classObs, "non_text")
-        revisitCount = obsLong(classObs, "revisits")
-        if (wantRedirects) redirectCount = obsLong(classObs, "redirects")
         val extPages =
           ext.select(col("url"), col("links"), col("base"), col("canonical"),
             // the change observation: hash of the extracted text (the
@@ -627,21 +627,21 @@ object Crawl {
       : org.apache.spark.util.sketch.BloomFilter =
     crawledUrls(spark, indexPath).stat.bloomFilter("url", expectedItems, fpp)
 
-  /** Persist a Bloom beside the index (atomic temp+rename — the
-    * maintenance-swap convention). */
+  /** Persist a Bloom beside the index (the maintenance swap,
+    * [[graft.store.DirSwap.replace]]). */
   def saveBloom(spark: SparkSession, bloom: org.apache.spark.util.sketch.BloomFilter,
-                path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + "._writing")
-    val out = fs.create(tmp, true)
-    try bloom.writeTo(out) finally out.close()
-    if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(s"bloom swap failed for $path")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"bloom rename failed for $path")
-  }
+                path: String): Unit =
+    writeFile(spark, path)(bloom.writeTo)
+
+  /** Replace the single file at `path` with what `body` writes. */
+  private def writeFile(spark: SparkSession, path: String)
+                       (body: java.io.OutputStream => Unit): Unit =
+    graft.store.DirSwap.replace(spark, path) { side =>
+      val p = new org.apache.hadoop.fs.Path(side)
+      val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(p, true)
+      try body(out) finally out.close()
+    }
 
   /** Load a [[saveBloom]] artifact. */
   def loadBloom(spark: SparkSession, path: String)
@@ -796,35 +796,41 @@ object Crawl {
       .agg(sum(col("n")).cast("long").as("n"))
   }
 
-  /** Fold the `edges/batch=N` partitions into ONE keyed by the highest
-    * batch id seen (counts SUM per host pair) — the [[compactNext]]
-    * sibling: same atomic delete+rename swap, same
-    * replays-out-of-contract-afterwards convention. Returns the
-    * retained batch id, or -1 when the ledger is empty/absent. */
-  def compactEdges(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val edges = new Path(s"$frontierDir/edges")
-    val fs = edges.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, edges.toString)) return -1L
-    val df = spark.read.parquet(edges.toString)
-    val maxBatch = df.agg(max(col("batch"))).head() match {
-      case r if r.isNullAt(0) => return -1L
+  /** Highest `batch` id in a ledger frame, -1 when it has no rows. */
+  private def maxBatchOf(df: DataFrame): Long =
+    df.agg(max(col("batch"))).head() match {
+      case r if r.isNullAt(0) => -1L
       case r => r.getAs[Number](0).longValue()
     }
-    val folded = df.groupBy("src_host", "dst_host")
-      .agg(sum(col("n")).cast("long").as("n"))
-    val tmp = new Path(s"$frontierDir/edges._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/edges._old")
-    fs.delete(old, true)
-    if (!fs.rename(edges, old))
-      throw new java.io.IOException(s"edges compact swap-out failed: $edges")
-    if (!fs.rename(tmp, edges))
-      throw new java.io.IOException(s"edges compact swap-in failed: $edges")
-    fs.delete(old, true)
+
+  /** The shared max-batch ledger fold: replace `frontierDir/name` with
+    * `fold` of its rows as ONE partition keyed by the highest batch id
+    * seen ([[graft.store.DirSwap.replace]]; replays of pre-compaction
+    * batches are out of contract afterwards). Returns that batch id, or
+    * -1 when the ledger is empty/absent — a committed-data probe, not
+    * bare existence: a crash-created empty dir must fold like absence,
+    * not fail schema inference (r15). */
+  private def foldToMaxBatch(spark: SparkSession, frontierDir: String,
+                             name: String)(fold: DataFrame => DataFrame): Long = {
+    val path = s"$frontierDir/$name"
+    graft.store.DirSwap.recover(spark, path)
+    if (!hasCommittedData(spark, path)) return -1L
+    val df = spark.read.parquet(path)
+    val maxBatch = maxBatchOf(df)
+    if (maxBatch >= 0)
+      graft.store.DirSwap.replace(spark, path)(side =>
+        fold(df).write.parquet(s"$side/batch=$maxBatch"))
     maxBatch
   }
+
+  /** Fold the `edges/batch=N` partitions into ONE keyed by the highest
+    * batch id seen (counts SUM per host pair) — the [[compactNext]]
+    * sibling. Returns the retained batch id, or -1 when the ledger is
+    * empty/absent. */
+  def compactEdges(spark: SparkSession, frontierDir: String): Long =
+    foldToMaxBatch(spark, frontierDir, "edges")(
+      _.groupBy("src_host", "dst_host")
+        .agg(sum(col("n")).cast("long").as("n")))
 
   private val ImagePairCols = Seq("url", "img_url", "alt", "title",
     "caption")
@@ -850,13 +856,20 @@ object Crawl {
         org.apache.spark.sql.types.StructType(ImagePairCols.map(c =>
           org.apache.spark.sql.types.StructField(c,
             org.apache.spark.sql.types.StringType))))
-    val df = spark.read.parquet(path)
-    val latest = df.groupBy(col("url").as("_il_url"))
-      .agg(max(col("batch")).as("_il_max"))
-    df.join(latest, col("url") === col("_il_url") &&
-        col("batch") === col("_il_max"))
-      .filter(col("img_url").isNotNull)
-      .select(ImagePairCols.map(col): _*)
+    latestPairs(spark.read.parquet(path), "img_url", ImagePairCols)
+  }
+
+  /** Per page url, the ledger rows of its LATEST batch, with the
+    * null-`srcCol` supersession sentinels dropped AFTER that selection —
+    * the read shared by the pair ledgers and their compactions. */
+  private def latestPairs(df: DataFrame, srcCol: String,
+                          cols: Seq[String]): DataFrame = {
+    val latest = df.groupBy(col("url").as("_lp_url"))
+      .agg(max(col("batch")).as("_lp_max"))
+    df.join(latest, col("url") === col("_lp_url") &&
+        col("batch") === col("_lp_max"))
+      .filter(col(srcCol).isNotNull)
+      .select(cols.map(col): _*)
   }
 
   /** Fold the `images/batch=N` partitions into ONE keyed by the highest
@@ -864,37 +877,11 @@ object Crawl {
     * [[imagePairsLedger]] read — superseded pair sets drop physically,
     * and null-src supersession sentinels fold to ABSENCE: dropped after
     * the latest-batch selection, so the pairs they superseded drop with
-    * them). The [[compactNext]] sibling: same atomic delete+rename
-    * swap, same replays-out-of-contract-afterwards convention. Returns
-    * the retained batch id, or -1 when the ledger is empty/absent. */
-  def compactImages(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val images = new Path(s"$frontierDir/images")
-    val fs = images.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, images.toString)) return -1L
-    val df = spark.read.parquet(images.toString)
-    val maxBatch = df.agg(max(col("batch"))).head() match {
-      case r if r.isNullAt(0) => return -1L
-      case r => r.getAs[Number](0).longValue()
-    }
-    val latest = df.groupBy(col("url").as("_il_url"))
-      .agg(max(col("batch")).as("_il_max"))
-    val folded = df.join(latest, col("url") === col("_il_url") &&
-        col("batch") === col("_il_max"))
-      .filter(col("img_url").isNotNull)
-      .select(ImagePairCols.map(col): _*)
-    val tmp = new Path(s"$frontierDir/images._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/images._old")
-    fs.delete(old, true)
-    if (!fs.rename(images, old))
-      throw new java.io.IOException(s"images compact swap-out failed: $images")
-    if (!fs.rename(tmp, images))
-      throw new java.io.IOException(s"images compact swap-in failed: $images")
-    fs.delete(old, true)
-    maxBatch
-  }
+    * them). The [[compactNext]] sibling. Returns the retained batch
+    * id, or -1 when the ledger is empty/absent. */
+  def compactImages(spark: SparkSession, frontierDir: String): Long =
+    foldToMaxBatch(spark, frontierDir, "images")(
+      latestPairs(_, "img_url", ImagePairCols))
 
   private val MediaPairCols = Seq("url", "media_url", "caption",
     "mime_type")
@@ -916,48 +903,17 @@ object Crawl {
         org.apache.spark.sql.types.StructType(MediaPairCols.map(c =>
           org.apache.spark.sql.types.StructField(c,
             org.apache.spark.sql.types.StringType))))
-    val df = spark.read.parquet(path)
-    val latest = df.groupBy(col("url").as("_ml_url"))
-      .agg(max(col("batch")).as("_ml_max"))
-    df.join(latest, col("url") === col("_ml_url") &&
-        col("batch") === col("_ml_max"))
-      .filter(col("media_url").isNotNull)
-      .select(MediaPairCols.map(col): _*)
+    latestPairs(spark.read.parquet(path), "media_url", MediaPairCols)
   }
 
   /** Fold the `media/batch=N` partitions into ONE keyed by the highest
     * batch id seen — the [[compactImages]] sibling: latest-batch pairs
-    * per feed url, sentinels fold to absence, atomic delete+rename
-    * swap, replays out of contract afterwards. Returns the retained
-    * batch id, or -1 when the ledger is empty/absent. */
-  def compactMedia(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val media = new Path(s"$frontierDir/media")
-    val fs = media.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, media.toString)) return -1L
-    val df = spark.read.parquet(media.toString)
-    val maxBatch = df.agg(max(col("batch"))).head() match {
-      case r if r.isNullAt(0) => return -1L
-      case r => r.getAs[Number](0).longValue()
-    }
-    val latest = df.groupBy(col("url").as("_ml_url"))
-      .agg(max(col("batch")).as("_ml_max"))
-    val folded = df.join(latest, col("url") === col("_ml_url") &&
-        col("batch") === col("_ml_max"))
-      .filter(col("media_url").isNotNull)
-      .select(MediaPairCols.map(col): _*)
-    val tmp = new Path(s"$frontierDir/media._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/media._old")
-    fs.delete(old, true)
-    if (!fs.rename(media, old))
-      throw new java.io.IOException(s"media compact swap-out failed: $media")
-    if (!fs.rename(tmp, media))
-      throw new java.io.IOException(s"media compact swap-in failed: $media")
-    fs.delete(old, true)
-    maxBatch
-  }
+    * per feed url, sentinels fold to absence, replays out of contract
+    * afterwards. Returns the retained batch id, or -1 when the ledger
+    * is empty/absent. */
+  def compactMedia(spark: SparkSession, frontierDir: String): Long =
+    foldToMaxBatch(spark, frontierDir, "media")(
+      latestPairs(_, "media_url", MediaPairCols))
 
   /** The image FETCH frontier (r17) — LAION step 2's missing glue: the
     * pairs ledger stores (page url, img_url, text) but nothing fed the
@@ -1806,21 +1762,18 @@ object Crawl {
     * the fold also PRESERVES the churn signal: the folded row keeps
     * the url's LAST observed hash plus accumulated (n_obs, n_changes)
     * — [[recrawlChurn]] over a compacted-then-extended ledger equals
-    * the uncompacted math (spec- and oracle-pinned). Atomic
-    * delete+rename swap (the maintenance convention); replays of
-    * PRE-compaction batches are out of contract afterwards, like every
-    * index compaction here. Returns the max batch id seen, or -1 when
-    * the ledger is empty/absent. */
+    * the uncompacted math (spec- and oracle-pinned). The maintenance
+    * swap ([[graft.store.DirSwap.replace]]); replays of PRE-compaction
+    * batches are out of contract afterwards, like every index
+    * compaction here. Returns the max batch id seen, or -1 when the
+    * ledger is empty/absent. */
   def compactFetched(spark: SparkSession, frontierDir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val fetched = new Path(s"$frontierDir/fetched")
-    val fs = fetched.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hasCommittedData(spark, fetched.toString)) return -1L
-    val df = spark.read.parquet(fetched.toString)
-    val maxBatch = df.agg(max(col("batch"))).head() match {
-      case r if r.isNullAt(0) => return -1L
-      case r => r.getAs[Number](0).longValue()
-    }
+    val fetched = s"$frontierDir/fetched"
+    graft.store.DirSwap.recover(spark, fetched)
+    if (!hasCommittedData(spark, fetched)) return -1L
+    val df = spark.read.parquet(fetched)
+    val maxBatch = maxBatchOf(df)
+    if (maxBatch < 0) return -1L
     val folded =
       if (!df.columns.contains("content_md5"))
         // legacy (pre-r15) ledgers: age-only fold, unchanged
@@ -1828,16 +1781,8 @@ object Crawl {
       else churnStats(df)
         .select(col("url"), col("content_md5"), col("n_obs"),
           col("n_changes"), col("last_batch").as("batch"))
-    val tmp = new Path(s"$frontierDir/fetched._compacting")
-    fs.delete(tmp, true)
-    folded.write.partitionBy("batch").parquet(tmp.toString)
-    val old = new Path(s"$frontierDir/fetched._old")
-    fs.delete(old, true)
-    if (!fs.rename(fetched, old))
-      throw new java.io.IOException(s"fetched compact swap-out failed: $fetched")
-    if (!fs.rename(tmp, fetched))
-      throw new java.io.IOException(s"fetched compact swap-in failed: $fetched")
-    fs.delete(old, true)
+    graft.store.DirSwap.replace(spark, fetched)(side =>
+      folded.write.partitionBy("batch").parquet(side))
     maxBatch
   }
 
@@ -1994,9 +1939,10 @@ object Crawl {
     * about the page too). Rewrites the ledgers minus the given urls,
     * PRESERVING the per-batch partition layout and every surviving
     * row verbatim (accumulators included — churn math over the
-    * survivors is untouched), via the atomic delete+rename swap of
-    * the compaction family; replays of pre-purge batches are out of
-    * contract afterwards (the shared convention). Returns (purged
+    * survivors is untouched), via the maintenance swap of the
+    * compaction family ([[graft.store.DirSwap.replace]]); replays of
+    * pre-purge batches are out of contract afterwards (the shared
+    * convention). Returns (purged
     * fetched rows, purged next rows, purged image pairs, purged
     * media pairs).
     *
@@ -2018,6 +1964,7 @@ object Crawl {
     def purge(name: String): Long = {
       val p = new Path(s"$frontierDir/$name")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.store.DirSwap.recover(spark, p.toString)
       if (!hasCommittedData(spark, p.toString)) return 0L
       val df = spark.read.parquet(p.toString)
       val before = df.count()
@@ -2030,16 +1977,8 @@ object Crawl {
         fs.delete(p, true)
         return before
       }
-      val tmp = new Path(s"$frontierDir/$name._purging")
-      fs.delete(tmp, true)
-      kept.write.partitionBy("batch").parquet(tmp.toString)
-      val old = new Path(s"$frontierDir/$name._old")
-      fs.delete(old, true)
-      if (!fs.rename(p, old))
-        throw new java.io.IOException(s"purge swap-out failed: $p")
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"purge swap-in failed: $p")
-      fs.delete(old, true)
+      graft.store.DirSwap.replace(spark, p.toString)(side =>
+        kept.write.partitionBy("batch").parquet(side))
       before - keptCount
     }
     (purge("fetched"), purge("next"), purge("images"), purge("media"))
@@ -2050,8 +1989,8 @@ object Crawl {
     * fetch-priority signal accumulates across discoveries), and urls
     * that have since been FETCHED drop (their ledger row gates them —
     * a frontier row for a fetched url is a guaranteed double-fetch).
-    * The [[compactFetched]] sibling: same atomic delete+rename swap,
-    * same replays-out-of-contract-afterwards convention. Run it before
+    * The [[compactFetched]] sibling: same maintenance swap, same
+    * replays-out-of-contract-afterwards convention. Run it before
     * handing `next/` to a fetcher that consumes across batches.
     * Returns the retained batch id, or -1 when the dir is empty/absent.
     *
@@ -2101,25 +2040,14 @@ object Crawl {
 
   private def compactNextImpl(spark: SparkSession, frontierDir: String,
                               fetchedBloom: org.apache.spark.util.sketch.BloomFilter,
-                              coversBelow: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val next = new Path(s"$frontierDir/next")
-    val fs = next.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed-data probe, not bare existence: a crash-created empty
-    // dir must fold like absence, not fail schema inference (r15)
-    if (!hasCommittedData(spark, next.toString)) return -1L
-    val df = spark.read.parquet(next.toString)
-    val maxBatch = df.agg(max(col("batch"))).head() match {
-      case r if r.isNullAt(0) => return -1L
-      case r => r.getAs[Number](0).longValue()
-    }
-    val folded0 = df.groupBy("url")
-      .agg(sum(col("n_refs")).cast("long").as("n_refs"))
-    val fetched = new Path(s"$frontierDir/fetched")
-    val folded =
-      if (!hasCommittedData(spark, fetched.toString)) folded0
+                              coversBelow: Long): Long =
+    foldToMaxBatch(spark, frontierDir, "next") { df =>
+      val folded0 = df.groupBy("url")
+        .agg(sum(col("n_refs")).cast("long").as("n_refs"))
+      val fetched = s"$frontierDir/fetched"
+      if (!hasCommittedData(spark, fetched)) folded0
       else {
-        val fetchedAll = spark.read.parquet(fetched.toString)
+        val fetchedAll = spark.read.parquet(fetched)
         val fetchedDf = fetchedAll.select("url")
         if (fetchedBloom == null)
           folded0.join(fetchedDf, Seq("url"), "left_anti")
@@ -2147,18 +2075,7 @@ object Crawl {
             maybe.join(broadcast(confirmed), Seq("url"), "left_anti"))
         }
       }
-    val tmp = new Path(s"$frontierDir/next._compacting")
-    fs.delete(tmp, true)
-    folded.write.parquet(s"$tmp/batch=$maxBatch")
-    val old = new Path(s"$frontierDir/next._old")
-    fs.delete(old, true)
-    if (!fs.rename(next, old))
-      throw new java.io.IOException(s"next compact swap-out failed: $next")
-    if (!fs.rename(tmp, next))
-      throw new java.io.IOException(s"next compact swap-in failed: $next")
-    fs.delete(old, true)
-    maxBatch
-  }
+    }
 
   /** Maintenance build of the streaming frontier's Bloom: every url the
     * corpus index has folded in (when `indexPath` is set — covers a
@@ -2183,18 +2100,13 @@ object Crawl {
     * [cutoff, batch) trickle exactly — per-batch cost stops growing
     * with crawl age. The meta lands AFTER the bloom (a crash between
     * the two leaves the previous coherent pair in place — both writes
-    * are atomic temp+rename swaps). */
+    * are [[graft.store.DirSwap.replace]] swaps). */
   def buildFetchedBloom(spark: SparkSession, frontierDir: String,
                         indexPath: String, expectedItems: Long,
                         fpp: Double = 0.01, bloomPath: String,
                         includeNext: Boolean = true): Long = {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    def maxBatchOf(df: DataFrame): Long =
-      df.agg(max(col("batch"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getAs[Number](0).longValue()
-      }
     val fetched = new Path(s"$frontierDir/fetched")
     val haveFetched = hasCommittedData(spark, fetched.toString)
     val fetchedDf =
@@ -2228,18 +2140,10 @@ object Crawl {
     saveBloom(spark, bloom, bloomPath)
     // meta sidecar: `coversBelow,next=<0|1>` (r15 — pre-r15 artifacts
     // hold the bare long and parse as next=1, which is what they were),
-    // same atomic-swap write
-    val metaP = new Path(bloomPath + ".meta")
-    val fs = metaP.getFileSystem(conf)
-    val tmp = new Path(bloomPath + ".meta._writing")
-    val out = fs.create(tmp, true)
-    try out.write(s"$coversBelow,next=${if (includeNext) 1 else 0}"
-      .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    finally out.close()
-    if (fs.exists(metaP) && !fs.delete(metaP, false))
-      throw new java.io.IOException(s"bloom meta swap failed for $metaP")
-    if (!fs.rename(tmp, metaP))
-      throw new java.io.IOException(s"bloom meta rename failed for $metaP")
+    // same swap write
+    writeFile(spark, bloomPath + ".meta")(_.write(
+      s"$coversBelow,next=${if (includeNext) 1 else 0}"
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
     coversBelow
   }
 

@@ -33,10 +33,6 @@ object Sitemaps {
     us < 0 || idx < us
   }
 
-  /** [[isIndex]] over a RAW (possibly gzipped) body. */
-  def isIndexFromBytes(body: Array[Byte]): Boolean =
-    decodeBody(body).exists(isIndex)
-
   private[pipeline] def decodeBody(body: Array[Byte]): Option[String] = {
     if (body == null) return None
     graft.sources.Warc.gunzipAll(body).map { bytes =>
@@ -87,12 +83,6 @@ object Sitemaps {
       } else i += 1
     }
     out.toArray
-  }
-
-  /** Column form: array of locs per sitemap body. */
-  def locsCol(xml: Column): Column = {
-    val u = udf((s: String) => locs(s))
-    u(xml)
   }
 
   /** (loc, lastmod|null) pairs in document order (r15): the protocol's
@@ -172,12 +162,6 @@ object Sitemaps {
   def locsFromBytes(body: Array[Byte]): Array[String] =
     // corrupt compressed bodies cost themselves (no locs)
     decodeBody(body).map(locs).getOrElse(Array.empty)
-
-  /** Column form of [[locsFromBytes]]. */
-  def locsFromBytesCol(body: Column): Column = {
-    val u = udf((b: Array[Byte]) => locsFromBytes(b))
-    u(body)
-  }
 
   /** Seed candidates from fetched sitemap bodies: every `<loc>` value
     * XML-entity-decoded (the protocol MANDATES escaping `&` as `&amp;`

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /**
  * Shared numbering discipline for the append-only persisted indexes
  * (minhash `sets/`, BM25 `stats/`, int8 `codes/` — the `installment=N`
- * partition-dir contract). One place owns "what is the next installment",
- * so every index family fails the same way on the same broken layouts.
+ * partition-dir contract). One place owns "what is the next installment"
+ * and how a table folds back to one installment, so every index family
+ * fails the same way on the same broken layouts.
  */
 object Installments {
 
@@ -35,6 +36,17 @@ object Installments {
           "is corrupt or only partially written; rebuild it (or restore " +
           "installment=0 from backup) before appending"))
   }
+
+  /** Compaction of one installment table: replace `dir` with `folded`
+    * written as the single `installment=0` partition, through
+    * [[DirSwap.replace]]. `folded` is evaluated inside the swap, after
+    * recovery, so it may read `dir` itself even when an earlier run was
+    * interrupted mid-swap. */
+  def fold(spark: SparkSession, dir: String,
+           folded: => org.apache.spark.sql.DataFrame): Unit =
+    DirSwap.replace(spark, dir) { side =>
+      folded.write.mode("overwrite").parquet(s"$side/installment=0")
+    }
 
   /** Maintenance observability for installment indexes (r17): per
     * (table, installment) row counts — the compaction/health signal an

@@ -26,7 +26,7 @@ object EventStreams extends Serializable {
     * (path, file modification time): a 1 B-url filter at 1% fpp is
     * ~1.2 GB — re-reading AND re-broadcasting it every micro-batch
     * would swamp the very cost the bloom removes. The artifact only
-    * changes when maintenance swaps it (atomic rename = new mtime), so
+    * changes when maintenance swaps it (a swapped-in file = new mtime), so
     * mtime is a sound cache key; the superseded broadcast is released
     * when a new one loads. A FETCHED-ONLY artifact (r15 — built for
     * [[graft.pipeline.Crawl.compactNext]], its meta records
@@ -303,32 +303,20 @@ object EventStreams extends Serializable {
    * max batch_id: a resumed stream's next micro-batch id is strictly
    * greater, so later appends still win last-writer-wins against the
    * rewritten baseline, and re-running the job is idempotent. The rewrite
-   * materializes fully in a side dir before a delete+rename swap — a reader
-   * concurrent with the swap sees either the old or the new log, and both
-   * compact to the same state. (On an object store where rename is
-   * copy+delete, run the job in the stream's maintenance window or layer
-   * the log on a table format with atomic commits; HDFS/posix renames are
-   * atomic.) Returns the compacted row count.
+   * goes through [[graft.store.DirSwap.replace]]; the old and the new log
+   * compact to the same state. Returns the compacted row count.
    */
   def compactAndRewrite(spark: SparkSession, outPath: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val log = spark.read.parquet(outPath)
-    val maxBatch = log.agg(max(col("batch_id"))).head().getLong(0)
-    val compacted = compactHourlyLog(log).withColumn("batch_id", lit(maxBatch))
-    val out = new Path(outPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(outPath + "._compacting")
-    // overwrite: a crashed prior compaction leaves only this side dir
-    compacted.write.mode("overwrite").parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
-    if (!fs.delete(out, true) || !fs.rename(tmp, out))
-      throw new java.io.IOException(s"changelog swap failed for $outPath")
-    // recache any CACHED plans over the path; note that (standard Spark
-    // overwrite semantics) lazy DataFrames created over the log BEFORE the
-    // rewrite hold the old file listing and must be re-created — fresh
-    // `spark.read.parquet(outPath)` calls list fresh and see the new log
-    spark.catalog.refreshByPath(outPath)
-    rows
+    graft.store.DirSwap.replace(spark, outPath) { side =>
+      val log = spark.read.parquet(outPath)
+      val maxBatch = log.agg(max(col("batch_id"))).head().getLong(0)
+      compactHourlyLog(log).withColumn("batch_id", lit(maxBatch))
+        .write.parquet(side)
+    }
+    // lazy DataFrames created over the log BEFORE the rewrite hold the
+    // old file listing and must be re-created (standard Spark overwrite
+    // semantics) — fresh `spark.read.parquet(outPath)` calls list fresh
+    spark.read.parquet(outPath).count()
   }
 
   /**

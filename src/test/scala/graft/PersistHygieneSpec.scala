@@ -71,6 +71,14 @@ class PersistHygieneSpec extends SparkTestBase {
     }
   }
 
+  test("fetch queries release their ledger checkpoint before returning") {
+    Seq("crawl_media_fetch", "crawl_image_fetch").foreach { q =>
+      assertNoNewPersists(q) {
+        SparkEntry.queries(q)(spark, sfDir).count()
+      }
+    }
+  }
+
   test("late-r15 crawl operators hold no cache beyond the operator") {
     import graft.pipeline.Crawl
     val urls = docs.select(

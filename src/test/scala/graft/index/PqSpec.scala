@@ -399,6 +399,38 @@ class PqSpec extends SparkTestBase {
     assert(after === before)
   }
 
+  test("IVF-PQ: a compaction interrupted mid-swap re-runs to the uninterrupted result") {
+    import java.nio.file.{Files, Paths}
+    val path = tmpIdx("ivfpq_swap")
+    Pq.ivfPqBuild(embs.filter($"vec_id" % 2 === 0), path, nlist = 8, m = 16,
+      ksub = 64, storeRaw = true)
+    Pq.ivfPqAppend(spark, path, embs.filter($"vec_id" % 2 === 1))
+    Pq.ivfPqDelete(spark, path,
+      embs.filter($"vec_id" % 5 === 0).select("vec_id"))
+    val crashed = tmpIdx("ivfpq_swap_crashed")
+    val src = Paths.get(path)
+    Files.walk(src).forEach(p =>
+      Files.copy(p, Paths.get(crashed).resolve(src.relativize(p).toString)))
+    // the state a crash between the swap's two renames leaves: the live
+    // codes/ renamed aside, a torn side dir, no codes/ at all
+    Files.move(Paths.get(s"$crashed/codes"), Paths.get(s"$crashed/codes._old"))
+    Files.createDirectories(Paths.get(s"$crashed/codes._compacting/list_id=0"))
+    Files.write(Paths.get(s"$crashed/codes._compacting/list_id=0/torn.parquet"),
+      Array[Byte](1, 2, 3))
+    val rows = Pq.ivfPqCompact(spark, path)
+    assert(Pq.ivfPqCompact(spark, crashed) === rows)
+    val q = queries()
+    def search(p: String) = Pq.ivfPqSearchRefined(spark, p, q, k = 5,
+        candidateK = 600, nprobe = 8)
+      .select($"query_id", $"vec_id", $"rank")
+      .as[(Long, Long, Int)].collect().toSet
+    assert(search(crashed) === search(path))
+    val leftovers = Files.list(Paths.get(crashed)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.contains("._"))
+    assert(leftovers.isEmpty, s"swap leftovers remain: ${leftovers.toSeq}")
+  }
+
   test("guards: candidateK >= k, dim divisible by m, ksub bounds") {
     val path = tmpIdx("guards")
     Pq.pqBuild(embs.limit(50), path, m = 8, ksub = 16)
